@@ -140,9 +140,8 @@ def main() -> int:
     ap.add_argument("dirs", nargs="+")
     ap.add_argument("--spread", action="store_true")
     ap.add_argument("--overhead", action="store_true")
-    ap.add_argument("--bench", default=os.path.join(ROOT, "BENCHMARK.json"))
     a = ap.parse_args()
-    specs = metric_specs(a.bench)
+    specs = metric_specs(os.path.join(ROOT, "BENCHMARK.json"))
     if a.spread:
         return show_spread(a.dirs[0], specs)
     if a.overhead:

@@ -90,7 +90,7 @@ WORKLOADS = {
 SETUP_REPS = 3
 BASE_NODES = 100
 DSL_CLIENTS = 2  # dsl_ops deals each round's templates in pairs
-MIN_DSL_ROUNDS = 3
+MIN_DSL_ROUNDS = 2
 FIRST = ("Austin", "Sam", "Jim", "Ada", "Lin", "Noor")
 LAST = ("Harris", "Lee", "Okafor", "Silva", "Berg")
 CITY = ("Boulder", "Denver", "Austin", "Lyon", "Osaka")
