@@ -7,13 +7,10 @@ is drawn from ``numpy.random.default_rng(seed)``, so one seed always
 gives byte-identical inputs; row counts follow the TPC-H scale factor
 (``sf=0.001`` gives 150 customers, 1,500 orders and about 6,000
 lineitems).
-
-Usage: python3 perfbench/datagen.py OUT_DIR [--sf 0.001] [--seed 1]
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 
 import numpy as np
@@ -177,15 +174,3 @@ def write(out_dir: str, sf: float, seed: int) -> dict[str, int]:
         rows[name] = t.num_rows
     return rows
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("out_dir")
-    ap.add_argument("--sf", type=float, default=0.001)
-    ap.add_argument("--seed", type=int, default=1)
-    a = ap.parse_args()
-    print(write(a.out_dir, a.sf, a.seed))
-
-
-if __name__ == "__main__":
-    main()

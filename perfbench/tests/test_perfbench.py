@@ -1,4 +1,4 @@
-"""The benchmark's own tests, on inputs at sf0.001.
+"""The benchmark's own tests, on inputs at sf0.001 (``PERFBENCH_SF``).
 
     python3 -m pytest perfbench/tests -q -p no:cacheprovider
 
@@ -21,6 +21,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 BENCH_DIR = os.path.dirname(HERE)
 ROOT = os.path.dirname(BENCH_DIR)
 sys.path[:0] = [ROOT, BENCH_DIR]
+os.environ["PERFBENCH_SF"] = "0.001"
 
 import compare  # noqa: E402
 import datagen  # noqa: E402
@@ -107,7 +108,8 @@ def test_traced_run_reports_every_per_layer_metric():
 
 def test_traced_self_times_sum_to_no_more_than_traced_wall_time():
     rec, _ = run_bench("serving", trace=1)
-    ops = rec["trace"]["ops"]
+    assert rec["trace"] == 1
+    ops = rec["trace_check"]["ops"]
     assert ops
     for op, t in ops.items():
         assert t["self_sum_s"] <= t["wall_s"] + 1e-6, op
@@ -225,3 +227,14 @@ def test_compare_verdicts():
     assert compare.verdict(base, slower, list(zip(base, slower)), spec) == "regressed"
     noisy = [50, 150, 60, 140, 100, 70, 130, 90, 110, 100]
     assert compare.verdict(base, noisy, list(zip(base, noisy)), spec) == "unresolved"
+
+
+def test_overhead_pairs_traced_with_untraced_records(tmp_path, capsys):
+    for trace, pass_s in ((0, 10.0), (1, 12.0)):
+        rec = {"workload": "batch", "seed": 1, "trace": trace,
+               "end_to_end": {"pass_s": pass_s}}
+        (tmp_path / f"batch-trace{trace}.json").write_text(json.dumps(rec))
+    compare.overhead(str(tmp_path), {"pass_s": {}})
+    out = capsys.readouterr().out
+    assert "batch: 1 untraced, 1 traced runs" in out
+    assert "overhead +20.0%" in out
