@@ -3,16 +3,19 @@
 The reference has no analytics surface (its only traversal is the bounded
 ``follow`` pipeline, ``src/core/FileStore.fs:166-220``); these extend the
 engine per the GraphX-for-analytics design (SURVEY.md §1.5): the vertex
-state is a DataFrame, each superstep is a join-aggregate against the edge
-table, and the driver loop carries the iteration. Every superstep result
-is eagerly localCheckpoint-ed — vertex state is O(|V|), small next to the
-edge table, and checkpointing stops the lazy plan from re-deriving every
-earlier superstep (see graph/traverse.py for the same pattern).
+state is a DataFrame and each superstep is a join-aggregate against the
+edge table. One function, ``supersteps``, carries every kernel's
+iteration (Pregelix's superstep operator): a kernel is only its step
+body, and ``supersteps`` owns the round loop, the eager lineage cut of
+each round's state, the early exit and the round budget. Cutting every
+round matters — vertex state is O(|V|), small next to the edge table,
+and the cut stops the lazy plan from re-deriving every earlier
+superstep (see graph/traverse.py for the same pattern).
 
-Scale: state and edges stay distributed; each superstep is one shuffle on
-the edge key (or zero when the edge table is pre-partitioned by src —
-``PropertyGraph.partition_edges``). No collect() of vertex state; the
-only driver-side values are scalar convergence counts.
+Scale: state and edges stay distributed, but each superstep re-shuffles
+the edge table today — nothing co-partitions the edges with the vertex
+state; that is open in ROADMAP.md direction 2. No collect() of vertex
+state; the only driver-side values are scalar probes.
 """
 
 from __future__ import annotations
@@ -22,11 +25,97 @@ from pyspark.sql import DataFrame, functions as F
 from ekati_spark.checkpoint import cut_lineage
 
 
+def supersteps(kernel, state, step, rounds, *, halt=None, strict=False):
+    """Run ``step`` for up to ``rounds`` supersteps; return the last state.
+
+    ``step(state, r)`` is the kernel's superstep ``r`` (1-based). A plain
+    step returns the next state as one DataFrame, which is cut here. A
+    step that materializes more than once per round is a generator: each
+    frame it yields is cut here and sent back, and its return value
+    (a frame, a tuple, ...) is the next state.
+
+    ``halt(state, frame)`` reads the round's first cut frame — the new
+    state, or the new frontier — against the previous state. True ends
+    the run with the previous state, which the round showed to be final.
+    With no ``halt`` the run is exactly ``rounds`` supersteps. Otherwise
+    the budget is one of two kinds:
+
+    - default: the bound is part of the result's meaning (a hop limit),
+      so running out of rounds is quiet;
+    - ``strict``: the kernel runs to a fixpoint. A change on the last
+      budgeted round may itself be the fixpoint, so one spare superstep
+      confirms it; if that one still does not halt, the result would be
+      silently partial, and this raises ``RuntimeError`` naming the
+      kernel.
+    """
+    for r in range(1, rounds + 1 + strict):
+        body = _body(step(state, r))
+        frame = next(body).transform(cut_lineage)
+        if halt is not None and halt(state, frame):
+            return state
+        if r > rounds:
+            raise RuntimeError(
+                f"{kernel}: still changing after {rounds} supersteps and one "
+                "confirming superstep; raise its round budget"
+            )
+        try:
+            while True:
+                frame = body.send(frame).transform(cut_lineage)
+        except StopIteration as end:
+            state = end.value
+    return state
+
+
+def _body(result):
+    """A step's result as a generator; a plain frame is a single yield."""
+    if isinstance(result, DataFrame):
+        return (yield result)
+    return (yield from result)
+
+
+def _empty(_, frontier: DataFrame) -> bool:
+    return frontier.isEmpty()
+
+
+def _unchanged(sig):
+    """Halt probe: the round changed nothing when ``sig`` of its new frame
+    equals the previous state's. Each frame's ``sig`` runs once."""
+    last = [None, None]  # the newest frame and its sig
+
+    def halt(prev, new):
+        before = last[1] if last[0] is prev else sig(prev)
+        last[:] = new, sig(new)
+        return last[1] == before
+
+    return halt
+
+
 def _nodes(edges: DataFrame) -> DataFrame:
     return (
         edges.select(F.col("src").alias("node_id"))
         .unionByName(edges.select(F.col("dst").alias("node_id")))
         .distinct()
+    )
+
+
+def _out_edges(edges: DataFrame) -> DataFrame:
+    """``(src, dst, deg)``: out-degree rides with each edge, so a rank
+    superstep is join → groupBy; cut because every superstep reads it."""
+    return (
+        edges.select("src", "dst")
+        .join(edges.groupBy("src").agg(F.count("*").alias("deg")), "src")
+        .transform(cut_lineage)
+    )
+
+
+def _in_sums(ranks: DataFrame, ed: DataFrame, total) -> DataFrame:
+    """``(dst, in_sum)``: each node's incoming rank/out-degree mass,
+    summed by ``total`` over the column ``c``."""
+    return (
+        ranks.join(ed, ranks.node_id == ed.src)
+        .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+        .groupBy("dst")
+        .agg(total.alias("in_sum"))
     )
 
 
@@ -46,43 +135,30 @@ def page_rank(
     """
     nodes = _nodes(edges).transform(cut_lineage)
     n = nodes.count()
-    # out-degree rides with each edge so a superstep is join → groupBy
-    ed = (
-        edges.select("src", "dst")
-        .join(
-            edges.groupBy("src").agg(F.count("*").alias("deg")),
-            "src",
+    ed = _out_edges(edges)
+
+    def step(ranks, _):
+        contribs = _in_sums(ranks, ed, F.sum("c"))
+        return nodes.join(
+            contribs, nodes.node_id == contribs.dst, "left"
+        ).select(
+            "node_id",
+            (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
+            ).alias("rank"),
         )
-        .transform(cut_lineage)
-    )
+
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(ed, ranks.node_id == ed.src)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes.node_id == contribs.dst, "left")
-            .select(
-                "node_id",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .transform(cut_lineage)
-        )
-    return ranks
+    return supersteps("page_rank", ranks, step, iterations)
 
 
 def connected_components(
     edges: DataFrame, max_iter: int = 20, require_converged: bool = True
 ) -> DataFrame:
     """Weakly connected components by iterative min-label propagation over
-    the undirected edge set; converges in ≤ diameter supersteps (driver
-    loop exits early when no label changes). Label = min node_id (string
+    the undirected edge set; converges in ≤ diameter supersteps (the run
+    ends early when no label changes). Label = min node_id (string
     order) in the component.
 
     Returns ``(node_id, component)``. For graphs with giant diameter an
@@ -91,20 +167,12 @@ def connected_components(
     propagation is for FK-shaped graphs whose diameter is bounded by the
     schema's join depth.
 
-    ``require_converged`` (default True) makes budget exhaustion LOUD: if
-    labels were still changing after ``max_iter`` supersteps the result
-    would be silently wrong on any graph whose diameter exceeds the
-    budget, so we raise instead of returning partial labels. Pass False
-    only when a bounded-propagation view is genuinely wanted.
-
-    Labels changing ON the final budgeted superstep is not yet proof of
-    non-convergence — a graph whose diameter exactly consumes the budget
-    reaches the fixpoint on that pass (confirmable only by one spare
-    no-change pass). So when the budget ends with changes, ONE extra
-    confirming superstep runs; we raise only if IT still changes labels
-    (it never advances the result: either it changes nothing, or we
-    raise). The bounded-propagation view (require_converged=False)
-    keeps exactly ``max_iter`` supersteps.
+    ``require_converged`` (default True) makes budget exhaustion LOUD
+    (a ``strict`` budget): labels still changing after ``max_iter``
+    supersteps and the confirming one raise, instead of returning labels
+    that are wrong on any graph whose diameter exceeds the budget. Pass
+    False only when a bounded-propagation view of at most ``max_iter``
+    supersteps is genuinely wanted.
     """
     und = (
         edges.select("src", "dst")
@@ -117,46 +185,31 @@ def connected_components(
     labels = _nodes(edges).withColumn("component", F.col("node_id"))
     labels = labels.transform(cut_lineage)
 
-    def superstep(cur: DataFrame) -> tuple[DataFrame, int]:
+    def step(cur, _):
         neighbor_min = (
             cur.join(und, cur.node_id == und.src)
             .groupBy(F.col("dst").alias("node_id"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_labels = (
-            cur.join(neighbor_min, "node_id", "left")
-            .select(
-                "node_id",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", "component")
-                ).alias("component"),
-            )
-            .transform(cut_lineage)
+        return cur.join(neighbor_min, "node_id", "left").select(
+            "node_id",
+            F.least(
+                F.col("component"), F.coalesce("nbr_min", "component")
+            ).alias("component"),
         )
-        n_changed = (
-            new_labels.join(cur.withColumnRenamed("component", "old"), "node_id")
+
+    def settled(cur, new):
+        changed = (
+            new.join(cur.withColumnRenamed("component", "old"), "node_id")
             .filter(F.col("component") != F.col("old"))
             .count()
         )
-        return new_labels, n_changed
+        return changed == 0
 
-    changed = 0
-    for _ in range(max_iter):
-        labels, changed = superstep(labels)
-        if changed == 0:
-            break
-    if changed != 0 and require_converged:
-        # changes on the final budgeted pass may BE the fixpoint pass:
-        # confirm with one spare superstep, raise only if it moves
-        _, changed = superstep(labels)
-        if changed != 0:
-            raise RuntimeError(
-                f"connected_components: {changed} labels still changing "
-                f"after max_iter={max_iter} supersteps — graph diameter "
-                "exceeds the budget; raise max_iter or use "
-                "connected_components_star"
-            )
-    return labels
+    return supersteps(
+        "connected_components", labels, step, max_iter,
+        halt=settled, strict=require_converged,
+    )
 
 
 def shortest_hops(
@@ -165,27 +218,10 @@ def shortest_hops(
     """Single/multi-source shortest path length in hops (unweighted BFS).
 
     Returns ``(node_id, hops)`` for every node within ``max_hops`` of any
-    seed (seeds at 0). The frontier/visited discipline is the same as
-    ``traverse.follow`` — min-hop per node is guaranteed because BFS
-    visits in hop order.
+    seed (seeds at 0): ``multi_source_hops`` with all seeds sharing one
+    search, so a node's distance is to its nearest seed.
     """
-    seeds = seeds.select("node_id").distinct().transform(cut_lineage)
-    out = seeds.withColumn("hops", F.lit(0))
-    visited = seeds
-    frontier = seeds
-    for hop in range(1, max_hops + 1):
-        frontier = (
-            frontier.join(edges, frontier.node_id == edges.src)
-            .select(F.col("dst").alias("node_id"))
-            .distinct()
-            .join(visited, "node_id", "left_anti")
-            .transform(cut_lineage)
-        )
-        if frontier.isEmpty():
-            break
-        out = out.unionByName(frontier.withColumn("hops", F.lit(hop)))
-        visited = visited.unionByName(frontier)
-    return out
+    return _bfs(edges, seeds.select("node_id"), max_hops)
 
 
 def multi_source_hops(
@@ -199,29 +235,44 @@ def multi_source_hops(
     table. This is the sampled-centrality shape (Eppstein-Wang): exact
     distances from a deterministic seed sample, aggregated downstream
     into closeness/harmonic estimates, instead of the all-pairs BFS
-    that cannot exist at 100 TB. Frontier/visited discipline matches
-    ``shortest_hops`` (per-seed visited set ⇒ hop order gives min-d)."""
-    s = (
-        seeds.select(F.col("node_id").alias("seed"))
-        .distinct()
-        .transform(cut_lineage)
-    )
-    frontier = s.withColumn("node_id", F.col("seed"))
-    visited = frontier
-    out = frontier.withColumn("hops", F.lit(0))
-    for hop in range(1, max_hops + 1):
-        frontier = (
+    that cannot exist at 100 TB."""
+    starts = seeds.select(F.col("node_id").alias("seed"), "node_id")
+    return _bfs(edges, starts, max_hops)
+
+
+def _bfs(edges: DataFrame, starts: DataFrame, max_hops: int) -> DataFrame:
+    """Level-synchronous BFS from ``starts``: ``node_id`` plus the columns
+    that label each search (none: one search from every start). The
+    frontier and visited discipline is the same as ``traverse.follow``:
+    a per-search anti-join against everything reached so far, so hop
+    order gives each node its min distance; an empty frontier ends the
+    run. Per-seed searches cut their reached set every hop; one search
+    reads the union of its cut frontiers. Returns ``starts``' columns
+    plus ``hops``."""
+    keys = starts.columns
+    labels = [c for c in keys if c != "node_id"]
+    frontier = starts.distinct().transform(cut_lineage)
+
+    def hop(state, r):
+        frontier, reached = state
+        frontier = yield (
             frontier.join(edges, frontier.node_id == edges.src)
-            .select("seed", F.col("dst").alias("node_id"))
+            .select(*labels, F.col("dst").alias("node_id"))
             .distinct()
-            .join(visited, ["seed", "node_id"], "left_anti")
-            .transform(cut_lineage)
+            .join(reached, keys, "left_anti")
         )
-        if frontier.isEmpty():
-            break
-        out = out.unionByName(frontier.withColumn("hops", F.lit(hop)))
-        visited = visited.unionByName(frontier).transform(cut_lineage)
-    return out
+        reached = reached.unionByName(frontier.withColumn("hops", F.lit(r)))
+        if labels:
+            # k searches' reached sets grow k-fold and every hop's
+            # anti-join re-reads them: cut, as the frontier
+            reached = yield reached
+        return frontier, reached
+
+    start = (frontier, frontier.withColumn("hops", F.lit(0)))
+    _, reached = supersteps(
+        "multi_source_hops", start, hop, max_hops, halt=_empty
+    )
+    return reached
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -275,6 +326,19 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _star_sig(e: DataFrame):
+    """Set signature of a canonical-deduped edge set: set equality ⟺
+    equal counts + equal order-free hash-sum. One 2-column aggregate job
+    per round, vs exceptAll's full set-difference shuffle (measured
+    23.3 s → 11.6 s on g50's sf0.01 verify)."""
+    return e.agg(
+        F.count("*").alias("n"),
+        # decimal accumulation: long-sum of 64-bit hashes overflows
+        # under ANSI mode; decimal(38,0) holds ~10^18 rows' worth
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    ).first()
+
+
 def connected_components_star(
     edges: DataFrame, max_iter: int = 20
 ) -> DataFrame:
@@ -283,40 +347,19 @@ def connected_components_star(
     diameter, unlike min-label propagation's O(diameter)
     (``connected_components``). Use this for path-shaped / high-diameter
     graphs at scale; both return ``(node_id, component)`` with component
-    = min node_id (string order) in the component.
+    = min node_id (string order) in the component. O(log² n) rounds
+    means 20 covers any conceivable n, so running out of the budget is a
+    logic/data anomaly and raises.
     """
     nodes = _nodes(edges).transform(cut_lineage)
-    e = _symmetrize(edges).transform(cut_lineage)
-
-    # Convergence probe: both sides are canonical-deduped, so set
-    # equality ⟺ equal counts + equal order-free hash-sum. One 2-column
-    # aggregate job per round, vs exceptAll's full set-difference
-    # shuffle (measured 23.3 s → 11.6 s on g50's sf0.01 verify).
-    def _sig(df: DataFrame):
-        return df.agg(
-            F.count("*").alias("n"),
-            # decimal accumulation: long-sum of 64-bit hashes overflows
-            # under ANSI mode; decimal(38,0) holds ~10^18 rows' worth
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-
-    sig = _sig(e)
-    converged = False
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).transform(cut_lineage)
-        sig2 = _sig(e2)
-        e = e2
-        if sig2 == sig:
-            converged = True
-            break
-        sig = sig2
-    if not converged:
-        # O(log² n) rounds means 20 covers any conceivable n; reaching
-        # here is a logic/data anomaly — fail loud, never label wrong.
-        raise RuntimeError(
-            f"connected_components_star: star-edge set not stable after "
-            f"max_iter={max_iter} rounds"
-        )
+    e = supersteps(
+        "connected_components_star",
+        _symmetrize(edges).transform(cut_lineage),
+        lambda e, _: _small_star(_large_star(e)),
+        max_iter,
+        halt=_unchanged(_star_sig),
+        strict=True,
+    )
     # at the fixed point the edges form stars: node → its component root
     comp = e.groupBy("u").agg(F.min("v").alias("component")).select(
         F.col("u").alias("node_id"), "component"
@@ -353,40 +396,26 @@ def personalized_page_rank(
         .otherwise(F.lit(0.0))
         .alias("reset"),
     ).transform(cut_lineage)
-    ed = (
-        edges.select("src", "dst")
-        .join(edges.groupBy("src").agg(F.count("*").alias("deg")), "src")
-        .transform(cut_lineage)
-    )
+    ed = _out_edges(edges)
+    # decimal accumulation: the double quotients are quantized to 18
+    # decimals (a deterministic per-value cast) and summed exactly, so
+    # in_sum doesn't depend on partition/merge order — same policy as
+    # queries/base.py::dsum, and what lets the unrolled-CTE oracle (g25)
+    # match bit-for-bit.
+    total = F.sum(F.col("c").cast("decimal(25,18)")).cast("double")
+
+    def step(ranks, _):
+        contribs = _in_sums(ranks, ed, total)
+        return base.join(contribs, base.node_id == contribs.dst, "left").select(
+            "node_id",
+            (
+                (1.0 - damping) * F.col("reset")
+                + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
+            ).alias("rank"),
+        )
+
     ranks = base.select("node_id", F.col("reset").alias("rank"))
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(ed, ranks.node_id == ed.src)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            # decimal accumulation: the double quotients are quantized
-            # to 18 decimals (a deterministic per-value cast) and summed
-            # exactly, so in_sum doesn't depend on partition/merge order
-            # — same policy as queries/base.py::dsum, and what lets the
-            # unrolled-CTE oracle (g25) match bit-for-bit.
-            .agg(
-                F.sum(F.col("c").cast("decimal(25,18)"))
-                .cast("double")
-                .alias("in_sum")
-            )
-        )
-        ranks = (
-            base.join(contribs, base.node_id == contribs.dst, "left")
-            .select(
-                "node_id",
-                (
-                    (1.0 - damping) * F.col("reset")
-                    + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .transform(cut_lineage)
-        )
-    return ranks
+    return supersteps("personalized_page_rank", ranks, step, iterations)
 
 
 def k_core(edges: DataFrame, k: int, max_iter: int = 200) -> DataFrame:
@@ -402,28 +431,20 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 200) -> DataFrame:
     within-core degree. Reference analog: none (Astn/ekati has no
     analytics kernels); part of the graph-analytics extension.
     """
-    e = _symmetrize(edges).transform(cut_lineage)
-    n_edges = e.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
+
+    def peel(e, _):
         deg = e.groupBy("u").agg(F.count("*").alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("u")
-        e2 = (
+        return (
             e.join(keep, "u")
             .join(keep.withColumnRenamed("u", "v"), "v")
             .select("u", "v")
-            .transform(cut_lineage)
         )
-        n_after = e2.count()
-        converged = n_after == n_edges
-        e, n_edges = e2, n_after
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"k_core did not converge within {max_iter} peeling rounds"
-        )
+
+    e = supersteps(
+        "k_core", _symmetrize(edges).transform(cut_lineage), peel, max_iter,
+        halt=_unchanged(DataFrame.count), strict=True,
+    )
     return e.groupBy(F.col("u").alias("node_id")).agg(
         F.count("*").alias("degree")
     )
@@ -442,35 +463,72 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     Per superstep: one shuffle join (neighbor labels), one partial-agg
     count shuffle, one window for the arg-max — all on node keys, so a
     1000-executor run co-partitions each stage; per-step state is
-    O(|V|) and eagerly checkpointed to cut lineage. Reference analog:
-    none (Astn/ekati has no analytics kernels).
+    O(|V|). Reference analog: none (Astn/ekati has no analytics
+    kernels).
 
     Returns ``(node_id, community)``.
     """
     from pyspark.sql import Window as W
 
     e = _symmetrize(edges).transform(cut_lineage)
-    labels = (
-        e.select(F.col("u").alias("node_id"))
-        .distinct()
-        .select("node_id", F.col("node_id").alias("community"))
-    )
-    for _ in range(iterations):
+    w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("community"))
+
+    def step(labels, _):
         votes = (
             e.join(labels, e["v"] == labels["node_id"])
             .groupBy(e["u"], "community")
             .agg(F.count("*").alias("c"))
         )
-        w = W.partitionBy("u").orderBy(F.desc("c"), F.asc("community"))
-        labels = (
+        return (
             votes.select(
                 "u", "community", F.row_number().over(w).alias("rn")
             )
             .filter(F.col("rn") == 1)
             .select(F.col("u").alias("node_id"), "community")
-            .transform(cut_lineage)
         )
-    return labels
+
+    labels = (
+        e.select(F.col("u").alias("node_id"))
+        .distinct()
+        .select("node_id", F.col("node_id").alias("community"))
+    )
+    return supersteps("label_propagation", labels, step, iterations)
+
+
+def _label_correcting(kernel, edges, start, col, on, value, rounds, strict):
+    """Label-correcting relaxation from the cut ``(node_id, <col>)``
+    ``start`` labels: per round, expand the nodes whose label improved
+    last round through the edges the join predicate ``on`` admits,
+    min-combine ``value`` per target, and keep only strict improvements.
+    ``on`` and ``value`` address the frontier as ``f`` and the edges as
+    ``e``. Pruning to improved nodes is safe because a node's unchanged
+    label was already propagated the round after it last improved; an
+    empty frontier ends the run."""
+
+    def relax(state, _):
+        frontier, best = state
+        f, e = frontier.alias("f"), edges.alias("e")
+        nxt = (
+            f.join(e, on)
+            .groupBy(F.col("e.dst").alias("node_id"))
+            .agg(F.min(value).alias(col))
+        )
+        improved = yield (
+            nxt.join(best.withColumnRenamed(col, "old"), "node_id", "left")
+            .filter(F.col("old").isNull() | (F.col(col) < F.col("old")))
+            .select("node_id", col)
+        )
+        best = yield (
+            best.unionByName(improved)
+            .groupBy("node_id")
+            .agg(F.min(col).alias(col))
+        )
+        return improved, best
+
+    _, best = supersteps(
+        kernel, (start, start), relax, rounds, halt=_empty, strict=strict
+    )
+    return best
 
 
 def weighted_shortest_paths(
@@ -480,13 +538,11 @@ def weighted_shortest_paths(
     minimum total edge cost over paths of at most ``max_hops`` edges
     from any seed (seeds at cost 0). ``edges`` is ``(src, dst, cost)``.
 
-    Frontier-pruned relaxation: each round propagates only nodes whose
-    distance improved last round (a node's unchanged distance was
-    already propagated the round after it last improved, so pruning
-    preserves the round-k invariant dist_k = min cost over <= k-edge
-    paths). Per-round state is O(|V|) and eagerly checkpointed, same
-    discipline as ``shortest_hops``; costs stay integral (long), so
-    min() is exact — no float path-sum ordering issues.
+    Frontier-pruned relaxation (``_label_correcting``) preserves the
+    round-k invariant dist_k = min cost over <= k-edge paths; the hop
+    bound is part of that meaning, so it stops quietly. Costs stay
+    integral (long), so min() is exact — no float path-sum ordering
+    issues.
     """
     dist = (
         seeds.select("node_id")
@@ -494,36 +550,12 @@ def weighted_shortest_paths(
         .withColumn("cost", F.lit(0).cast("long"))
         .transform(cut_lineage)
     )
-    frontier = dist
-    for _ in range(max_hops):
-        f, e = frontier.alias("f"), edges.alias("e")
-        relaxed = (
-            f.join(e, F.col("f.node_id") == F.col("e.src"))
-            .select(
-                F.col("e.dst").alias("node_id"),
-                (F.col("f.cost") + F.col("e.cost")).alias("cost"),
-            )
-            .groupBy("node_id")
-            .agg(F.min("cost").alias("cost"))
-        )
-        improved = (
-            relaxed.join(
-                dist.withColumnRenamed("cost", "old"), "node_id", "left"
-            )
-            .filter(F.col("old").isNull() | (F.col("cost") < F.col("old")))
-            .select("node_id", "cost")
-            .transform(cut_lineage)
-        )
-        if improved.isEmpty():
-            break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("node_id")
-            .agg(F.min("cost").alias("cost"))
-            .transform(cut_lineage)
-        )
-        frontier = improved
-    return dist
+    return _label_correcting(
+        "weighted_shortest_paths", edges, dist, "cost",
+        on=F.col("f.node_id") == F.col("e.src"),
+        value=F.col("f.cost") + F.col("e.cost"),
+        rounds=max_hops, strict=False,
+    )
 
 
 def earliest_arrival(
@@ -536,15 +568,13 @@ def earliest_arrival(
     reachability (g22) cannot express (u→v at t=5 then v→w at t=3 is
     NOT a path).
 
-    Label-correcting iteration: per round, expand the improved
-    frontier through time-valid edges, min-merge arrivals, keep only
-    nodes whose best arrival improved. Earliest-arrival dominance
-    (arriving earlier never removes options) makes per-node min a safe
-    prune, so the fixpoint equals the min over the full closure —
-    which is what the oracle computes. State is (node, best_t) —
-    O(|V|), distributed, checkpointed per round; rounds ≤ the longest
-    strictly-time-increasing chain, with ``max_rounds`` as a loud
-    backstop.
+    Label-correcting iteration (``_label_correcting``) over time-valid
+    edges. Earliest-arrival dominance (arriving earlier never removes
+    options) makes per-node min a safe prune, so the fixpoint equals the
+    min over the full closure — which is what the oracle computes. State
+    is (node, best_t) — O(|V|), distributed; rounds ≤ the longest
+    strictly-time-increasing chain, and a chain longer than
+    ``max_rounds`` raises instead of returning partial arrivals.
 
     ``seeds``: ``(node_id, t0)`` rows (t0 = just before the horizon of
     interest). Returns ``(node_id, t)`` earliest arrivals incl. seeds.
@@ -552,34 +582,13 @@ def earliest_arrival(
     best = seeds.select(
         "node_id", F.col("t0").alias("t")
     ).transform(cut_lineage)
-    frontier = best
-    for _ in range(max_rounds):
-        nxt = (
-            frontier.alias("f")
-            .join(
-                edges.alias("e"),
-                (F.col("f.node_id") == F.col("e.src"))
-                & (F.col("e.t") > F.col("f.t")),
-            )
-            .groupBy(F.col("e.dst").alias("node_id"))
-            .agg(F.min("e.t").alias("t"))
-        )
-        improved = (
-            nxt.join(best.withColumnRenamed("t", "bt"), "node_id", "left")
-            .filter(F.col("bt").isNull() | (F.col("t") < F.col("bt")))
-            .select("node_id", "t")
-            .transform(cut_lineage)
-        )
-        if improved.isEmpty():
-            break
-        best = (
-            best.unionByName(improved)
-            .groupBy("node_id")
-            .agg(F.min("t").alias("t"))
-            .transform(cut_lineage)
-        )
-        frontier = improved
-    return best
+    return _label_correcting(
+        "earliest_arrival", edges, best, "t",
+        on=(F.col("f.node_id") == F.col("e.src"))
+        & (F.col("e.t") > F.col("f.t")),
+        value=F.col("e.t"),
+        rounds=max_rounds, strict=True,
+    )
 
 
 def k_truss(edges: DataFrame, k: int, max_iter: int = 40) -> DataFrame:
@@ -593,16 +602,15 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 40) -> DataFrame:
     via the common-neighbor self-join over the current survivor set,
     drop every edge below k-2, repeat to fixpoint (the simultaneous
     peel converges to the unique maximal truss regardless of order).
-    Returns the surviving ``(u, v)`` edges.
+    Returns the surviving ``(u, v)`` edges; a peel deeper than
+    ``max_iter`` raises.
 
     Scale shape: support counting is the oriented triangle join (cost
     Σ deg² over the CURRENT set — shrinking every round); survivor
-    state is the edge list, checkpointed per round; the driver sees
-    only the per-round count. Rounds ≤ peel depth (single digits on
-    real graphs)."""
-    e = edges.select("u", "v").transform(cut_lineage)
-    n = e.count()
-    for _ in range(max_iter):
+    state is the edge list; the driver sees only the per-round count.
+    Rounds ≤ peel depth (single digits on real graphs)."""
+
+    def peel(e, _):
         sym = e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -620,14 +628,12 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 40) -> DataFrame:
             .filter(F.col("s") >= k - 2)
             .select("u", "v")
         )
-        kept = e.join(supported, ["u", "v"], "left_semi").transform(
-            cut_lineage
-        )
-        m = kept.count()
-        if m == n:
-            break
-        e, n = kept, m
-    return e
+        return e.join(supported, ["u", "v"], "left_semi")
+
+    return supersteps(
+        "k_truss", edges.select("u", "v").transform(cut_lineage), peel,
+        max_iter, halt=_unchanged(DataFrame.count), strict=True,
+    )
 
 
 def boruvka_msf(
@@ -655,7 +661,10 @@ def boruvka_msf(
     flattens every in-tree to its root in O(log chain) joins. Vertex
     state is O(V); per round cost is a handful of shuffles on comp/
     edge keys — nothing quadratic, nothing driver-side but the
-    empty-frontier test."""
+    empty-frontier test. Borůvka halves the component count per round,
+    so cross-component edges left after ``max_rounds`` mean an
+    under-sized budget, and the run raises rather than return a
+    non-spanning forest."""
     nodes = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
@@ -664,20 +673,21 @@ def boruvka_msf(
     comp = nodes.select(
         "node", F.col("node").alias("comp")
     ).transform(cut_lineage)
-    chosen_all = None
-    hooked_all = False
-    for _ in range(max_rounds):
+
+    def jump(lab, _):
+        j = lab.select(F.col("c").alias("jc"), F.col("t").alias("jt"))
+        return lab.join(j, F.col("t") == F.col("jc"), "left").select(
+            "c", F.coalesce("jt", "t").alias("t")
+        )
+
+    def hook(state, _):
+        comp, forest = state
         cu = comp.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
         cv = comp.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
-        ec = (
-            edges.join(cu, "u")
-            .join(cv, "v")
-            .filter(F.col("cu") != F.col("cv"))
-            .transform(cut_lineage)  # consumed 2x: emptiness probe + cand
+        # consumed 2x: the halt probe + cand
+        ec = yield (
+            edges.join(cu, "u").join(cv, "v").filter(F.col("cu") != F.col("cv"))
         )
-        if ec.limit(1).count() == 0:
-            hooked_all = True
-            break
         cand = ec.select(
             F.col("cu").alias("c"), "wkey", "u", "v", F.col("cv").alias("t")
         ).unionByName(
@@ -686,7 +696,8 @@ def boruvka_msf(
                 F.col("cu").alias("t"),
             )
         )
-        best = (
+        # consumed 3x: chosen + hook sides
+        best = yield (
             cand.groupBy("c")
             .agg(F.max(F.struct("wkey", "u", "v", "t")).alias("b"))
             .select(
@@ -696,14 +707,8 @@ def boruvka_msf(
                 F.col("b.v").alias("v"),
                 F.col("b.t").alias("t"),
             )
-            .transform(cut_lineage)  # consumed 3x: chosen + hook sides
         )
         chosen = best.select("u", "v", "wkey").distinct()
-        chosen_all = (
-            chosen
-            if chosen_all is None
-            else chosen_all.unionByName(chosen)
-        )
         h2 = best.select(F.col("c").alias("t2c"), F.col("t").alias("t2t"))
         lab = (
             best.select("c", "t")
@@ -718,14 +723,8 @@ def boruvka_msf(
                 .alias("t"),
             )
         )
-        for _ in range(jump_rounds):
-            j = lab.select(F.col("c").alias("jc"), F.col("t").alias("jt"))
-            lab = (
-                lab.join(j, F.col("t") == F.col("jc"), "left")
-                .select("c", F.coalesce("jt", "t").alias("t"))
-                .transform(cut_lineage)
-            )
-        comp = (
+        lab = supersteps("boruvka_msf", lab, jump, jump_rounds)
+        comp = yield (
             comp.join(
                 lab.select(
                     F.col("c").alias("comp"), F.col("t").alias("newc")
@@ -734,26 +733,13 @@ def boruvka_msf(
                 "left",
             )
             .select("node", F.coalesce("newc", "comp").alias("comp"))
-            .transform(cut_lineage)
         )
-    if not hooked_all:
-        # Budget exhausted without the empty-frontier probe firing: if a
-        # cross-component edge survives, the returned forest would be
-        # silently non-spanning — fail loud instead. (Borůvka halves the
-        # component count per round, so 2^max_rounds initial components
-        # always converge; this probe guards the docstring's billion-node
-        # contract against an under-sized budget.)
-        cu = comp.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
-        cv = comp.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
-        leftover = (
-            edges.join(cu, "u").join(cv, "v").filter(F.col("cu") != F.col("cv"))
-        )
-        if leftover.limit(1).count() > 0:
-            raise RuntimeError(
-                f"boruvka_msf: max_rounds={max_rounds} exhausted with "
-                "cross-component edges remaining — raise max_rounds "
-                "(each round halves the component count)"
-            )
-    if chosen_all is None:
-        chosen_all = edges.select("u", "v", "wkey").limit(0)
-    return chosen_all.distinct(), comp
+        return comp, chosen if forest is None else forest.unionByName(chosen)
+
+    comp, forest = supersteps(
+        "boruvka_msf", (comp, None), hook, max_rounds,
+        halt=lambda _, ec: ec.limit(1).count() == 0, strict=True,
+    )
+    if forest is None:
+        forest = edges.select("u", "v", "wkey").limit(0)
+    return forest.distinct(), comp

@@ -19,9 +19,9 @@ keeps all versions ordered by ts.
 lineitem etc.) so traversal results are verifiable by the relational
 DuckDB oracle via joins.
 
-Scale: both DataFrames stay distributed; ``edges`` can be pre-hash-
-partitioned on ``src`` (``partition_edges``) so every BFS hop reuses the
-same partitioning instead of reshuffling.
+Scale: both DataFrames stay distributed. Each BFS hop or superstep
+re-shuffles ``edges`` today; partitioning them once on ``src`` so the
+hops reuse it is open in ROADMAP.md direction 2.
 """
 
 from __future__ import annotations
@@ -104,10 +104,6 @@ class PropertyGraph:
             F.col("ts"),
         )
         return PropertyGraph(self.props, rev)
-
-    def partition_edges(self, n: int) -> "PropertyGraph":
-        """Hash-partition edges by src once so each BFS hop co-locates."""
-        return PropertyGraph(self.props, self.edges.repartition(n, "src"))
 
     # -- mutation / lookup (SURVEY §2 #8, #9) ------------------------------
 

@@ -16,6 +16,7 @@ from ekati_spark.checkpoint import cut_lineage
 from ekati_spark.driverside import local_rows_df
 
 from ekati_spark.catalog import load_table
+from ekati_spark.graph.algorithms import supersteps
 from ekati_spark.graph.model import PropertyGraph
 from ekati_spark.graph.traverse import Any, Edge, Or, follow
 from ekati_spark.scratch import mkscratch
@@ -1300,6 +1301,18 @@ def _copurchase_edges(orders, li):
     )
 
 
+def _copurchase_und(spark, sf_dir):
+    """Both orientations ``(u, v)`` of the co-purchase edges, cut once:
+    every consumer reads them on each BFS hop or superstep."""
+    e = _copurchase_edges(
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "lineitem"),
+    ).select("u", "v")
+    return e.unionByName(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).transform(cut_lineage)
+
+
 @register(
     "g30_link_prediction",
     oracle="""
@@ -1554,33 +1567,29 @@ def g32_hits(spark, sf_dir):
         .transform(cut_lineage)  # reused by all 4 propagation joins
     )
 
-    def _norm(df, key):
-        # Materialize the raw per-round scores BEFORE the max probe:
-        # the probe and the normalized output both read the ≤node-count
-        # checkpoint, so the w-join + aggregation chain above executes
-        # ONCE per round (the old order ran it twice — once under
-        # agg(max).first(), again under the output's checkpoint; the
-        # sf0.1 stage trace showed every round's 586k-row join shuffle
-        # duplicated). Normalization stays a narrow projection over the
-        # materialized blocks — tiny, consumed by the next join + top-k.
-        raw = df.transform(cut_lineage)
+    def _scale(raw, key):
+        # per-round max normalization of the cut raw scores: the max
+        # probe and the narrow normalizing projection both read the
+        # ≤node-count checkpoint, so the w-join + aggregation chain runs
+        # ONCE per round (a probe ahead of the cut would run it twice —
+        # in the sf0.1 stage trace every round's join shuffle doubled).
         m = int(raw.agg(F.max("v")).first()[0])
         return raw.select(key, F.expr(f"v * {PPM}L div {m}L").alias("v"))
 
-    a = _norm(w.groupBy("s").agg(F.sum("w").alias("v")), "s")
-    for _ in range(1):  # one and a half more rounds: h1 -> a2 -> h2
-        h = _norm(
-            w.join(a, "s").groupBy("c").agg(F.sum(F.col("w") * F.col("v")).alias("v")),
-            "c",
+    def propagate(scores, key, out):
+        return w.join(scores, key).groupBy(out).agg(
+            F.sum(F.col("w") * F.col("v")).alias("v")
         )
-        a = _norm(
-            w.join(h, "c").groupBy("s").agg(F.sum(F.col("w") * F.col("v")).alias("v")),
-            "s",
-        )
-    h = _norm(
-        w.join(a, "s").groupBy("c").agg(F.sum(F.col("w") * F.col("v")).alias("v")),
-        "c",
-    )
+
+    def half_step(state, r):
+        a, h = state
+        if r % 2:  # hubs from authorities
+            return a, _scale((yield propagate(a, "s", "c")), "c")
+        return _scale((yield propagate(h, "c", "s")), "s"), h
+
+    a = w.groupBy("s").agg(F.sum("w").alias("v")).transform(cut_lineage)
+    # one and a half more rounds: h1 -> a2 -> h2
+    a, h = supersteps("g32_hits", (_scale(a, "s"), None), half_step, 3)
     top_a = (
         a.orderBy(F.col("v").desc(), "s")
         .limit(20)
@@ -1654,15 +1663,7 @@ def g33_harmonic_centrality(spark, sf_dir):
     MIN(d) — bounded by #seeds × #nodes × (max_hops+1) rows."""
     from ekati_spark.graph.algorithms import multi_source_hops
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(cut_lineage)  # consumed every BFS hop + seed pick
+    und = _copurchase_und(spark, sf_dir)
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     seeds = (
         und.select(F.col("u").alias("node_id"))
@@ -1742,15 +1743,7 @@ def g34_diameter_sweep(spark, sf_dir):
     is THE diameter estimator — the exact alternative is all-pairs."""
     from ekati_spark.graph.algorithms import shortest_hops
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(cut_lineage)  # consumed by every hop of both sweeps
+    und = _copurchase_und(spark, sf_dir)
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     seed = und.agg(F.min("u")).first()[0]
     d1 = shortest_hops(
@@ -2219,17 +2212,9 @@ def g39_betweenness_sampled(spark, sf_dir):
     one join against the next level's delta table. Per-level state is
     localCheckpointed — consumed by the next level AND the final union.
     Levels are bounded (4), so the driver loop is O(1) plans."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
     NANO = 1_000_000_000
     MAXD = 4
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).transform(cut_lineage)  # consumed by every forward + backward level
+    und = _copurchase_und(spark, sf_dir)
     seeds = (
         und.select(F.col("u").alias("seed"))
         .distinct()
@@ -2754,16 +2739,7 @@ def g43_neighborhood_function(spark, sf_dir):
     parts — g30/g31's graph). Reference analog: the reference has no
     neighborhood-function operator; this extends the graph-analytics
     family the 100-TB-native way."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .transform(cut_lineage)  # consumed by every superstep
-    )
+    und = _copurchase_und(spark, sf_dir)
     tail = "substr(md5('hb' || CAST(z AS STRING)), 1, 15)"
     init = und.select(F.col("u").alias("z")).distinct().select(
         F.col("z").alias("owner"),
@@ -2773,19 +2749,9 @@ def g43_neighborhood_function(spark, sf_dir):
         ).alias("j"),
         F.expr(_HB_RHO.format(tail=tail)).cast("long").alias("rho"),
     )
-    state = init.transform(cut_lineage)
-    out = []
-    for t in (1, 2, 3):
-        contrib = und.join(
-            state, state.owner == und.v, "inner"
-        ).select(F.col("u").alias("owner"), "j", "rho")
-        state = (
-            state.unionByName(contrib)
-            .groupBy("owner", "j")
-            .agg(F.max("rho").alias("rho"))
-            .transform(cut_lineage)  # next superstep + this t's report
-        )
-        sv = state.groupBy("owner").agg(
+
+    def report(regs, t):
+        sv = regs.groupBy("owner").agg(
             (
                 F.sum(
                     F.expr("shiftleft(CAST(1 AS BIGINT), 32 - CAST(rho AS INT))")
@@ -2795,14 +2761,28 @@ def g43_neighborhood_function(spark, sf_dir):
             .cast("long")
             .alias("sv")
         )
-        out.append(
-            sv.agg(
-                F.count("*").cast("long").alias("n_nodes"),
-                F.sum("sv").cast("long").alias("sum_s"),
-                F.min("sv").cast("long").alias("min_s"),
-                F.max("sv").cast("long").alias("max_s"),
-            ).select(F.lit(t).cast("int").alias("t"), "*")
+        return sv.agg(
+            F.count("*").cast("long").alias("n_nodes"),
+            F.sum("sv").cast("long").alias("sum_s"),
+            F.min("sv").cast("long").alias("min_s"),
+            F.max("sv").cast("long").alias("max_s"),
+        ).select(F.lit(t).cast("int").alias("t"), "*")
+
+    def superstep(state, t):
+        regs, out = state
+        contrib = und.join(
+            regs, regs.owner == und.v, "inner"
+        ).select(F.col("u").alias("owner"), "j", "rho")
+        # cut: read by the next superstep + this t's report
+        regs = yield (
+            regs.unionByName(contrib)
+            .groupBy("owner", "j")
+            .agg(F.max("rho").alias("rho"))
         )
+        return regs, [*out, report(regs, t)]
+
+    start = (init.transform(cut_lineage), [])
+    _, out = supersteps("g43_neighborhood_function", start, superstep, 3)
     res = out[0]
     for df in out[1:]:
         res = res.unionByName(df)
@@ -2856,16 +2836,7 @@ def g44_bidirectional_shortest_path(spark, sf_dir):
     oracle checks it against a plain single-source closure. Frontier
     state is O(visited) DataFrames, lineage-cut per level (reliable
     checkpointable); NULL dist = not reachable within 8 hops."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e = (
-        _copurchase_edges(orders, li)
-        .select("u", "v")
-    )
-    und = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .transform(cut_lineage)
-    )
+    und = _copurchase_und(spark, sf_dir)
     lo, hi = und.agg(F.min("u"), F.max("u")).first()
     src, dst = int(lo), int(hi)
 

@@ -546,9 +546,13 @@ class EkatiServer:
         from ekati_spark.wire import proto as W
 
         def handler(headers, body):
-            hd = dict(headers)
-            method = hd.get(":path", "").rsplit("/", 1)[-1]
-            resp_headers = [("content-type", "application/grpc")]
+            method = dict(headers).get(":path", "").rsplit("/", 1)[-1]
+            return 200, [("content-type", "application/grpc")], (
+                lambda: call(method, body)
+            )
+
+        def call(method, body):
+            """``(payload, trailers)`` of one gRPC request."""
             try:
                 # inside the try: a compressed-flag or truncated frame
                 # raises and must become a grpc-status trailer, not a
@@ -557,13 +561,13 @@ class EkatiServer:
                 # (12); a truncated/malformed frame is INTERNAL (13).
                 msgs = list(W.iter_frames(body))
             except W.UnsupportedCompressionError as e:
-                return 200, resp_headers, b"", [
+                return b"", [
                     ("grpc-status", "12"),  # UNIMPLEMENTED: encoding
                     ("grpc-message", str(e)),
                     ("grpc-accept-encoding", "identity"),
                 ]
             except ValueError as e:
-                return 200, resp_headers, b"", [
+                return b"", [
                     ("grpc-status", "13"),  # INTERNAL: malformed frame
                     ("grpc-message", str(e)),
                 ]
@@ -571,24 +575,24 @@ class EkatiServer:
             try:
                 res = self.grpc_call(method, raw)
             except ValueError as e:
-                return 200, resp_headers, b"", [
+                return b"", [
                     ("grpc-status", "3"),  # INVALID_ARGUMENT
                     ("grpc-message", str(e)),
                 ]
             except Exception as e:  # engine error -> UNKNOWN
-                return 200, resp_headers, b"", [
+                return b"", [
                     ("grpc-status", "2"),
                     ("grpc-message", f"{type(e).__name__}: {e}"),
                 ]
             if res is None:
-                return 200, resp_headers, b"", [
+                return b"", [
                     ("grpc-status", "12"),  # UNIMPLEMENTED
                     ("grpc-message", f"no method {method}"),
                 ]
             payload, framed = res
             if not framed:
                 payload = W.frame(payload)
-            return 200, resp_headers, payload, [("grpc-status", "0")]
+            return payload, [("grpc-status", "0")]
 
         return handler
 

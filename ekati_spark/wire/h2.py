@@ -19,10 +19,11 @@ Scope is the server side of gRPC's HTTP/2 profile:
   compress however they like);
 - DATA reassembly per stream until END_STREAM, with receive-window
   replenishment;
-- responses as HEADERS + flow-controlled DATA (≤ peer
-  SETTINGS_MAX_FRAME_SIZE per frame, connection + stream send windows
-  honored, WINDOW_UPDATE consumed while output is pending) + an
-  END_STREAM trailers HEADERS frame — the gRPC status channel.
+- responses as HEADERS, sent before the request runs, +
+  flow-controlled DATA (≤ peer SETTINGS_MAX_FRAME_SIZE per frame,
+  connection + stream send windows honored, WINDOW_UPDATE consumed
+  while output is pending) + an END_STREAM trailers HEADERS frame —
+  the gRPC status channel.
 
 Interop is pinned in tests/test_h2.py by driving the server with the
 stock ``curl`` (libnghttp2) and ``nghttp`` clients end to end.
@@ -89,8 +90,10 @@ class _Stream:
 
 class H2Connection:
     """One cleartext HTTP/2 connection; ``handler(headers, body) ->
-    (status, headers, body, trailers)`` is invoked per completed
-    request stream and the response is written back flow-controlled."""
+    (status, headers, finish)`` is invoked per completed request stream.
+    The status and headers are sent at once; then ``finish() -> (body,
+    trailers)`` runs the request, and its response is written back
+    flow-controlled."""
 
     def __init__(self, sock: socket.socket, handler):
         self.sock = sock
@@ -301,21 +304,14 @@ class H2Connection:
 
     def _respond(self, stream_id: int) -> None:
         st = self.streams[stream_id]
-        status, headers, body, trailers = self.handler(
-            st.headers, bytes(st.body)
-        )
+        status, headers, finish = self.handler(st.headers, bytes(st.body))
+        # the response HEADERS go out before the request's work runs: a
+        # slow request shows at once that its response has started
         hdr_block = hpackc.encode_headers(
             [(":status", str(status)), *headers]
         )
-        if not body and not trailers:
-            self._send(
-                pack_frame(
-                    HEADERS, END_HEADERS | END_STREAM, stream_id, hdr_block
-                )
-            )
-            self.streams.pop(stream_id, None)
-            return
         self._send(pack_frame(HEADERS, END_HEADERS, stream_id, hdr_block))
+        body, trailers = finish()
         self.pending.append([stream_id, bytearray(body), trailers])
         self._flush_pending()
 

@@ -73,6 +73,68 @@ def test_connected_components_exact_budget_confirms(spark):
         connected_components(e, max_iter=3).collect()
 
 
+# Simultaneous 4-truss peel of this graph drops edges on three rounds
+# before its fixpoint, the empty truss (found by simulating the peel).
+_TRUSS_PEEL_DEPTH_3 = [
+    (0, 2), (0, 3), (0, 4), (0, 5), (1, 2), (1, 3),
+    (1, 5), (2, 4), (2, 5), (3, 4), (3, 5),
+]
+
+
+def _arrivals_on_path(spark, n_edges, max_rounds):
+    """Path 0 -> 1 -> ... whose edge i -> i+1 fires at t = i + 1, so
+    each round reaches exactly one more node."""
+    from ekati_spark.graph.algorithms import earliest_arrival
+
+    edges = spark.createDataFrame(
+        [(i, i + 1, i + 1) for i in range(n_edges)],
+        "src long, dst long, t int",
+    )
+    seeds = spark.createDataFrame([(0, 0)], "node_id long, t0 int")
+    return earliest_arrival(edges, seeds, max_rounds=max_rounds)
+
+
+def _truss_peel(spark, max_iter):
+    from ekati_spark.graph.algorithms import k_truss
+
+    e = spark.createDataFrame(_TRUSS_PEEL_DEPTH_3, "u long, v long")
+    return k_truss(e, k=4, max_iter=max_iter)
+
+
+@pytest.mark.parametrize(
+    "run, want_rows",
+    [
+        pytest.param(
+            lambda s: _arrivals_on_path(s, 5, max_rounds=4), None,
+            id="earliest_arrival-path-one-edge-over",
+        ),
+        pytest.param(
+            lambda s: _arrivals_on_path(s, 4, max_rounds=4), 5,
+            id="earliest_arrival-path-exact-budget",
+        ),
+        pytest.param(
+            lambda s: _truss_peel(s, max_iter=2), None,
+            id="k_truss-peel-deeper-than-budget",
+        ),
+        pytest.param(
+            lambda s: _truss_peel(s, max_iter=3), 0,
+            id="k_truss-peel-exact-budget",
+        ),
+    ],
+)
+def test_fixpoint_budget_raises_only_when_exhausted(spark, run, want_rows):
+    """Fixpoint kernels must not return a partial result when their
+    round budget runs out: one spare superstep confirms a fixpoint that
+    lands exactly on the budget, and a run still changing after it
+    raises (the rule ``test_connected_components_exact_budget_confirms``
+    pins for CC)."""
+    if want_rows is None:
+        with pytest.raises(RuntimeError, match="still changing"):
+            run(spark)
+    else:
+        assert run(spark).count() == want_rows
+
+
 def test_shortest_hops_min_over_paths(spark):
     """d is reachable in 1 (a->d) and in 2 (a->b->d): BFS must report 1."""
     e = _edges(spark, [("a", "b"), ("b", "d"), ("a", "d"), ("d", "z")])
