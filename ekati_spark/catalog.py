@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ekati_spark.scratch import build_once
 from ekati_spark.session import default_parallelism
 
 TABLES = (
@@ -51,19 +52,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
 
-# DataFrame handles are reusable within a session; re-calling
-# spark.read.parquet re-lists files and re-reads footers for schema
-# (~0.3 s/table), which multiplies across the many load_table calls a
-# single query makes. Keyed by applicationId (stable per live session,
-# fresh after a restart — unlike id(spark), which the allocator can
-# reuse and hand a stale handle of a stopped session).
-_table_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def session_key(spark: SparkSession) -> str:
-    return spark.sparkContext.applicationId
-
-
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize events.ts to TimestampType regardless of how the parquet
     stores it. Generated testdata has shipped both TIMESTAMP(NANOS) (read
@@ -86,16 +74,17 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (session_key(spark), sf_dir, name)
-    hit = _table_cache.get(key)
-    if hit is not None:
-        return hit
-    ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        df = normalize_events_ts(df)
-    _table_cache[key] = df
-    return df
+    """The session's handle on ``sf_dir/<name>.parquet``, built once per
+    input fingerprint: re-calling ``spark.read.parquet`` re-lists files
+    and re-reads footers for schema (~0.3 s/table), which multiplies
+    across the many load_table calls a single query makes."""
+
+    def build() -> DataFrame:
+        ensure_session_confs(spark)
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return normalize_events_ts(df) if name == "events" else df
+
+    return build_once(spark, ("table", sf_dir, name), sf_dir, build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

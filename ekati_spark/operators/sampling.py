@@ -265,10 +265,12 @@ def global_shuffle(
     into ONE window partition. Instead: range-repartition + sort by the
     hash (Spark's distributed sort), count rows per partition (a
     #partitions-row aggregate), broadcast the cumulative offsets, and
-    assign ``pos = offset + local index`` in a single Arrow pass. The
-    sorted frame is persisted so the count job and the assignment job
-    see identical partition boundaries (range sampling is otherwise
-    re-drawn per job; a deployment would checkpoint instead).
+    assign ``pos = offset + local index``. Because the hash is
+    uniform, the partition of each row is computed from its hash prefix
+    (``ordered_row_number``'s ``bucket_col``), so no boundary sampling
+    is needed; only the ``prefix_col`` path keeps the sampled range
+    exchange. NULL keys hash to NULL, sort first, and take the first
+    positions.
     """
     h = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     if prefix_col is not None:
@@ -286,12 +288,14 @@ def global_shuffle(
             num_partitions=num_partitions,
         )
     # The sort key IS a uniform hash, so the range boundaries are known
-    # analytically: bucket i covers hash prefixes [i/n, (i+1)/n) of the
-    # 48-bit keyspace. lowercase-hex lexicographic order == numeric
-    # order of the prefix, so the bucket is monotone in the (_h, key)
-    # total order — ordered_row_number's pinned-bucket contract — and
-    # the sampled range exchange, its boundary-sampling job, and the
-    # persist all drop out (round-16 verdict item 6; guide §2.4).
+    # analytically: bucket i of m covers hash prefixes [i/m, (i+1)/m) of
+    # the 40-bit keyspace of the first 10 hex chars. lowercase-hex
+    # lexicographic order == numeric order of the prefix, so the bucket
+    # is monotone in the (_h, key) total order — ordered_row_number's
+    # pinned-bucket contract — and the sampled range exchange and its
+    # boundary-sampling job drop out (round-16 verdict item 6; guide
+    # §2.4). A NULL key makes _h NULL; NULLs sort first, so their
+    # bucket is 0.
     n = int(
         num_partitions
         or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -302,8 +306,8 @@ def global_shuffle(
     # integer div keeps the mapping exact end-to-end.
     m = min(64 * n, 1 << 22)
     bucket = F.expr(
-        f"cast(conv(substring(_h, 1, 10), 16, 10) as bigint) * {m}"
-        " div 1099511627776"  # 2^40
+        f"coalesce(cast(conv(substring(_h, 1, 10), 16, 10) as bigint) * {m}"
+        " div 1099511627776, 0)"  # 2^40
     )
     return ordered_row_number(
         df.withColumn("_h", h),
@@ -375,14 +379,18 @@ def ordered_row_number(
     order ⇒ an analytic uniform bucket from the hash prefix exists);
     the suffix-array sort keeps the sampled range path — string keys
     have no analytic boundary, and a re-sampled boundary set would
-    not be bit-stable across the two consuming jobs.
+    not be bit-stable across the two consuming jobs. ``bucket_col``
+    and ``neighbor_col`` together raise ``ValueError``: the boundary
+    fix-up runs on the range path only.
     """
+    if bucket_col is not None and neighbor_col is not None:
+        raise ValueError("bucket_col and neighbor_col cannot be combined")
     drop_cols = drop_cols or []
     n = int(
         num_partitions
         or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    if bucket_col is not None and neighbor_col is None:
+    if bucket_col is not None:
         # The pinned bucket needs no range exchange and no boundary
         # sampling pass — one full input pass fewer. Hash-repartition
         # by the bucket BEFORE the persist: hashpartitioning(_pid)

@@ -965,93 +965,6 @@ def _score_probed(assigned: DataFrame, qp: DataFrame, dim: int, k: int) -> DataF
     )
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    kmeans_iters: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Persist an IVF index: fit centroids, assign every vector to its
-    list, and write the corpus LIST-PARTITIONED to ``path`` — the 100 TB
-    layout where a probe is parquet partition pruning, not a scan.
-
-    Layout: ``path/lists/list_id=N/*.parquet`` (neighbor_id, v, nv) and
-    ``path/centroids`` (list_id, cent). Build once, probe many — the
-    index-build cost (k-means + one full shuffle on list_id) amortizes
-    across every subsequent query batch. Returns the number of lists.
-    """
-    spark = corpus.sparkSession
-    dim = _infer_dim(corpus, vec_col)
-    c = corpus.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("v"),
-        norm(vec_col, dim).alias("nv"),
-    )
-    centroids = _seed_centroids(c, n_lists, seed, "neighbor_id")
-    for _ in range(kmeans_iters):
-        centroids = _lloyd_step(c, centroids)
-    assigned = _assign_lists(
-        c, centroids, "neighbor_id long, v array<float>, nv double, list_id long"
-    )
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-        f"{path}/lists"
-    )
-    spark.createDataFrame(
-        [(i, [float(x) for x in cent]) for i, cent in enumerate(centroids)],
-        "list_id int, cent array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    return len(centroids)
-
-
-def ivf_topk_from_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Probe a persisted IVF index (``build_ivf_index``): load the
-    k-sized centroid table, pick each query's n_probe nearest lists, and
-    read ONLY those list partitions — the probed list ids become a
-    literal ``isin`` filter on the partition column, so the scan prunes
-    to |probed lists| / n_lists of the corpus (PartitionFilters, asserted
-    in tests). Scoring is identical to ``ivf_topk``."""
-    cent_rows = collect_bounded(
-        spark.read.parquet(f"{path}/centroids").orderBy("list_id"),
-        65_536,  # centroid table = n_lists rows
-        "IVF centroid table",
-    )
-    centroids = [list(r.cent) for r in cent_rows]
-    if not centroids:
-        # index built from an empty / all-invalid corpus: empty result
-        # with the contract schema, matching ivf_topk's behavior
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    dim = len(centroids[0])
-    q = _norm_queries(queries, dim, query_id_col, query_vec_col)
-    qp = _probe_lists(
-        q, centroids, min(n_probe, len(centroids)), spark, dim
-    ).transform(cut_lineage)  # consumed twice: probed-list collect + join
-    probed = [
-        r.list_id
-        for r in collect_bounded(
-            qp.select("list_id").distinct(), 65_536, "probed IVF lists"
-        )
-    ]
-    assigned = spark.read.parquet(f"{path}/lists").filter(
-        F.col("list_id").isin(probed)
-    )
-    return _score_probed(assigned, qp, dim, k)
-
-
 def bitext_margin_pairs(
     src: DataFrame,
     tgt: DataFrame,
@@ -1598,7 +1511,7 @@ def ivf_topk_int(
     are single mapInPandas passes (int64 matmul per Arrow batch),
     candidates meet probed lists in one equi-join, and the final
     top-k is a per-query window. At 100 TB the assigned corpus is
-    written list-partitioned exactly like build_ivf_index."""
+    written list-partitioned exactly like build_ivf_index_int."""
     assigned, cents = _int_kmeans(
         corpus, n_lists, kmeans_iters, scale, id_col, vec_col
     )
@@ -2114,10 +2027,10 @@ def build_ivf_index_int(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """Persist the INTEGER-deterministic IVF index (the replayable twin
-    of ``build_ivf_index``): quantized vectors list-partitioned under
-    ``path/lists`` (probe = parquet partition pruning) and the frozen
-    int64 centroids under ``path/centroids``. Returns list count."""
+    """Persist the INTEGER-deterministic IVF index: quantized vectors
+    list-partitioned under ``path/lists`` (probe = parquet partition
+    pruning) and the frozen int64 centroids under ``path/centroids``.
+    Returns list count."""
     spark = corpus.sparkSession
     assigned, cents = _int_kmeans(
         corpus, n_lists, kmeans_iters, scale, id_col, vec_col
@@ -2191,8 +2104,7 @@ def ivf_topk_int_from_index(
     """Probe a persisted integer IVF index (original build PLUS any
     appended batches): identical scoring to ``ivf_topk_int``; the scan
     reads only the probed list partitions (PartitionFilters via the
-    ``isin`` on the partition column, same contract as
-    ``ivf_topk_from_index``)."""
+    ``isin`` on the partition column)."""
     cents = _read_int_centroids(spark, path)
     if not cents:
         return spark.createDataFrame(

@@ -2288,7 +2288,7 @@ def st35_stream_graph_maintenance(spark, sf_dir):
     from ekati_spark.queries.llm import _l135_store
 
     # FROZEN index: the same persisted base-graph store l135
-    # maintains — built once per (session, sf_dir), read per trigger
+    # maintains — built once per (session, input set), read per trigger
     g = spark.read.parquet(f"{_l135_store(spark, sf_dir)}/edges")
     tmp = Path(mkscratch("st35_"))
     store = str(tmp / "edges")

@@ -351,20 +351,20 @@ def test_graph_save_load_roundtrip(engine, tmp_path):
     assert orig == back and len(back) == 1
 
 
-def test_graph_cache_evicts_on_new_sf_dir(spark, sf_dir):
-    """The per-(session, sf_dir) FK-graph cache is bounded: pointing the
-    same session at a new sf_dir unpersists and evicts the old graph
-    (round-3 ADVICE: unbounded persist = slow leak in a long service)."""
-    from ekati_spark.catalog import session_key
-    from ekati_spark.queries.graph import _graph, _graph_cache
+def test_graph_registry_evicts_on_new_sf_dir(spark, sf_dir):
+    """The session's FK graph is one registry entry: pointing the same
+    session at a new sf_dir unpersists the old graph and registers the
+    new one (round-3 ADVICE: unbounded persist = slow leak in a long
+    service)."""
+    from ekati_spark.queries.graph import _graph
+    from ekati_spark.scratch import COUNTS
 
     g1 = _graph(spark, sf_dir)
     assert g1.edges.is_cached
     g2 = _graph(spark, "/root/testdata/sf0.01")
-    sk = session_key(spark)
-    assert [k for k in _graph_cache if k[0] == sk] == [
-        (sk, "/root/testdata/sf0.01")
-    ]
+    hits = COUNTS["fk_graph"].hits
+    assert _graph(spark, "/root/testdata/sf0.01") is g2
+    assert COUNTS["fk_graph"].hits == hits + 1
     assert not g1.edges.is_cached
     assert g2.edges.is_cached
     # leave the suite's usual graph warm for whoever runs next

@@ -1129,17 +1129,16 @@ def test_l93_persisted_ivf_probe_prunes_list_partitions(spark, sf_dir):
     assert "list_id" in tail, tail
 
 
-def test_l127b_store_cache_warm_serve_and_eviction(spark, sf_dir):
-    """The l127b postings store builds ONCE per (session, sf_dir) and
+def test_l127b_store_registry_warm_serve_and_eviction(spark, sf_dir):
+    """The l127b postings store builds ONCE per (session, input set) and
     warm invocations serve from it byte-identically (the l86
     store-vs-rebuild identity); switching the session to another
     sf_dir evicts AND removes the previous store directory (no tempdir
     accretion — the round-14 advice)."""
     import os
-    import shutil
 
     import ekati_spark.queries as Q
-    from ekati_spark.queries.llm import _l127b_store, _l127b_store_cache
+    from ekati_spark.queries.llm import _l127b_store
 
     fn = Q.REGISTRY["l127b_hybrid_rrf_indexed"].fn
     cold = sorted(map(tuple, fn(spark, sf_dir).collect()))
@@ -1157,9 +1156,50 @@ def test_l127b_store_cache_warm_serve_and_eviction(spark, sf_dir):
         assert not os.path.exists(p1)
         assert os.path.exists(f"{p2}/postings")
     finally:
-        for k in [k for k, v in _l127b_store_cache.items() if v == p2]:
-            _l127b_store_cache.pop(k)
-        shutil.rmtree(p2, ignore_errors=True)
+        # leave the suite's store registered; that evicts p2 in turn
+        _l127b_store(spark, sf_dir)
+    assert not os.path.exists(p2)
+
+
+def test_registry_rebuilds_when_an_input_file_changes(spark, sf_dir, tmp_path):
+    """A registered value is valid only while its inputs are unchanged:
+    rewriting documents.parquet within the session turns the next
+    lookup of the l127b store and of the table handle into a miss — a
+    new store directory, the old one removed, and a table handle that
+    reads the new rows."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from ekati_spark.queries.llm import _l127b_store
+    from ekati_spark.scratch import COUNTS
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for f in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, f), os.path.join(sf, f))
+    table, store = COUNTS[("table", sf, "documents")], COUNTS["l127b_idx"]
+
+    p1 = _l127b_store(spark, sf)
+    docs = load_table(spark, sf, "documents")
+    n1 = docs.count()
+    t_miss, s_hit, s_miss = table.misses, store.hits, store.misses
+    # unchanged inputs: both lookups hit
+    assert _l127b_store(spark, sf) == p1
+    assert load_table(spark, sf, "documents") is docs
+    assert (store.hits, store.misses) == (s_hit + 1, s_miss)
+    assert table.misses == t_miss
+
+    path = os.path.join(sf, "documents.parquet")
+    pq.write_table(pq.read_table(path).slice(0, n1 // 2), path)
+    p2 = _l127b_store(spark, sf)
+    assert p2 != p1
+    assert not os.path.exists(p1)
+    assert os.path.exists(f"{p2}/postings")
+    assert store.misses == s_miss + 1
+    assert load_table(spark, sf, "documents").count() == n1 // 2
+    assert table.misses == t_miss + 1
 
 
 def test_l128_mmr_semantics(spark, sf_dir):

@@ -123,23 +123,43 @@ def test_global_shuffle_bucket_path_matches_window_reference(spark):
     the md5 prefix (no sampled range exchange, no persist) — the
     assigned positions must still equal the naive single-window
     ``row_number() OVER (ORDER BY md5(salt||key), key)`` reference
-    bit-for-bit, at any partition count."""
+    bit-for-bit, at any partition count. NULL keys hash to NULL and sort
+    first, so they keep their rows and take positions 1..#NULL."""
     from pyspark.sql import Window
 
-    df = spark.createDataFrame([(i,) for i in range(3000)], "k long")
+    n_null = 3
+    df = spark.createDataFrame(
+        [(i,) for i in range(3000)] + [(None,)] * n_null, "k long"
+    )
     h = F.md5(F.concat(F.lit("shuf"), F.col("k").cast("string")))
     ref = {
         r.k: r.pos
         for r in df.withColumn(
             "pos", F.row_number().over(Window.orderBy(h, F.col("k")))
         ).collect()
+        if r.k is not None
     }
     for n in (1, 7, 64):
-        got = {
-            r.k: r.pos
-            for r in S.global_shuffle(df, "k", num_partitions=n).collect()
-        }
+        rows = S.global_shuffle(df, "k", num_partitions=n).collect()
+        assert sorted(r.pos for r in rows) == list(
+            range(1, 3000 + n_null + 1)
+        ), f"num_partitions={n}"
+        assert sorted(r.pos for r in rows if r.k is None) == list(
+            range(1, n_null + 1)
+        ), f"num_partitions={n}"
+        got = {r.k: r.pos for r in rows if r.k is not None}
         assert got == ref, f"num_partitions={n}"
+
+
+def test_ordered_row_number_rejects_bucket_with_neighbor(spark):
+    """The boundary fix-up of ``neighbor_col`` runs on the range path
+    only, so combining it with a pinned ``bucket_col`` raises instead of
+    falling back to the range path."""
+    df = spark.createDataFrame([(i,) for i in range(10)], "k long")
+    with pytest.raises(ValueError, match="bucket_col"):
+        S.ordered_row_number(
+            df, ["k"], neighbor_col="k", bucket_col=F.col("k") % 2
+        )
 
 
 def test_leakage_safe_split_is_group_atomic(spark, sf_dir):
